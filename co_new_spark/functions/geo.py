@@ -78,14 +78,8 @@ def encode_a(lat: Column, lon: Column, ndigits: int = 9) -> Column:
 def _encode_b_cell_udf(rbits: int):
     @F.pandas_udf(LongType())
     def enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la, lo = _to_np(lat), _to_np(lon)
-        x, y = proj.forward(la, lo)
-        finite = np.isfinite(x) & np.isfinite(y)
-        bits, valid = grids.grid_b_encode_xy(
-            np.where(finite, x, 0.0), np.where(finite, y, 0.0), rbits
-        )
-        cell = cells.pack(bits, np.full(bits.shape, 4 + rbits, dtype=np.int64))
-        return pd.Series(np.where(valid & finite, cell, -1))
+        x, y = proj.forward(_to_np(lat), _to_np(lon))
+        return pd.Series(cells.cell_b_from_xy(x, y, rbits))
 
     return enc
 
@@ -99,9 +93,7 @@ def encode_b_cell(lat: Column, lon: Column, rbits: int) -> Column:
 def _xy_cell_udf(rbits: int):
     @F.pandas_udf(LongType())
     def enc(x: pd.Series, y: pd.Series) -> pd.Series:
-        bits, valid = grids.grid_b_encode_xy(_to_np(x), _to_np(y), rbits)
-        cell = cells.pack(bits, np.full(bits.shape, 4 + rbits, dtype=np.int64))
-        return pd.Series(np.where(valid, cell, -1))
+        return pd.Series(cells.cell_b_from_xy(_to_np(x), _to_np(y), rbits))
 
     return enc
 
@@ -122,14 +114,8 @@ _BOX = StructType([StructField(n, DoubleType()) for n in ("xmin", "ymin", "xmax"
 def _latlon_to_xy_cell_udf(rbits: int):
     @F.pandas_udf(_XYC)
     def enc(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        la, lo = _to_np(lat), _to_np(lon)
-        x, y = proj.forward(la, lo)
-        finite = np.isfinite(x) & np.isfinite(y)
-        bits, valid = grids.grid_b_encode_xy(
-            np.where(finite, x, 0.0), np.where(finite, y, 0.0), rbits)
-        cell = cells.pack(bits, np.full(bits.shape, 4 + rbits, dtype=np.int64))
-        return pd.DataFrame({"x": x, "y": y,
-                             "cell": np.where(valid & finite, cell, -1)})
+        x, y = proj.forward(_to_np(lat), _to_np(lon))
+        return pd.DataFrame({"x": x, "y": y, "cell": cells.cell_b_from_xy(x, y, rbits)})
 
     return enc
 
@@ -216,13 +202,8 @@ def _encode_b_cell_from_text_udf(rbits: int):
             lat_s, lon_s = g_lat, pc.struct_field(g, "lon")
         lat = pc.cast(lat_s, pa.float64()).to_numpy(zero_copy_only=False)
         lon = pc.cast(lon_s, pa.float64()).to_numpy(zero_copy_only=False)
-        ok = np.isfinite(lat) & np.isfinite(lon)
-        x, y = proj.forward(np.where(ok, lat, 0.0), np.where(ok, lon, 0.0))
-        f = ok & np.isfinite(x) & np.isfinite(y)
-        bits, valid = grids.grid_b_encode_xy(
-            np.where(f, x, 0.0), np.where(f, y, 0.0), rbits)
-        cell = cells.pack(bits, np.full(bits.shape, 4 + rbits, dtype=np.int64))
-        return pd.Series(np.where(valid & f, cell, -1))
+        x, y = proj.forward(lat, lon)  # NaN/inf lat or lon -> non-finite x, y
+        return pd.Series(cells.cell_b_from_xy(x, y, rbits))
 
     return enc
 

@@ -132,6 +132,14 @@ def cell_b_from_global_ji(gy, gx, rbits: int) -> np.ndarray:
     return np.where(inb & (digit >= 0), out, np.int64(-1))
 
 
+def cell_b_from_xy(x, y, rbits: int) -> np.ndarray:
+    """EPSG:9377 (x, y) -> Grid B cell at ``rbits`` refinement; -1 where x or y
+    is non-finite or off-grid.  The one Grid B encode behind every geocode UDF."""
+    finite = np.isfinite(x) & np.isfinite(y)
+    bits, valid = grids.grid_b_encode_xy(np.where(finite, x, 0.0), np.where(finite, y, 0.0), rbits)
+    return np.where(valid & finite, pack(bits, 4 + rbits), np.int64(-1))
+
+
 def neighbors_b(cell, ring: int = 1) -> np.ndarray:
     """Grid B king-move neighbors at ring r -> (n, (2r+1)^2 - 1) int64, -1 = off-grid.
 
@@ -165,22 +173,6 @@ def cell_b_box(cell) -> tuple[np.ndarray, ...]:
 def cell_b_center(cell) -> tuple[np.ndarray, np.ndarray]:
     x0, y0, x1, y1 = cell_b_box(cell)
     return (x0 + x1) / 2.0, (y0 + y1) / 2.0
-
-
-def cell_b_polygon(cell) -> np.ndarray:
-    """Grid B cell -> closed ring array (n, 5, 2) of EPSG:9377 vertices."""
-    x0, y0, x1, y1 = cell_b_box(cell)
-    ring = np.stack(
-        [
-            np.stack([x0, y0], axis=-1),
-            np.stack([x1, y0], axis=-1),
-            np.stack([x1, y1], axis=-1),
-            np.stack([x0, y1], axis=-1),
-            np.stack([x0, y0], axis=-1),
-        ],
-        axis=-2,
-    )
-    return ring
 
 
 def area_m2(cell) -> np.ndarray:

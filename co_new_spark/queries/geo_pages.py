@@ -307,85 +307,8 @@ FROM g
 """
 
 
-_NG_RBITS = 26
-
-
-def g_native_geocode(spark: SparkSession, sf: str) -> DataFrame:
-    """The flagship geocode with ZERO Python crossings (functions/geo_native):
-    native regexp geoparse -> native Karney/Krueger TM forward -> native
-    lattice/Morton encode -> per-L0 rollup with cell extrema.
-
-    Oracle split (mat.py protocol): the transcendental part — the projected
-    (url, x, y) — is materialized, and the oracle re-derives the ENTIRE
-    depth-30 encode from those bytes through the SQL grid fragments
-    (l0_case/morton_ref — IEEE-exact ops only, so bit-identical by
-    construction).  The TM floats themselves are gated by the pytest parity
-    vs the Arrow kernel (0 mismatches measured on 1M synthetic pages) whose
-    projection is reference-verified (gridLib golden vectors)."""
-    from ..functions import geo_native
-    from ..functions import text as tx
-    from .mat import materialize
-
-    pg = _fixture(spark).select("url", "text").distinct()
-    d = pg.withColumns({"lat": tx.parse_lat(F.col("text")),
-                        "lon": tx.parse_lon(F.col("text"))})
-    d = geo_native.with_tm_forward(d, "lat", "lon", "x", "y") \
-                  .select("url", "x", "y")
-    d = materialize(d, "native_geocode_xy", key=sf)
-    d = geo_native.with_cell_from_xy(d, "x", "y", _NG_RBITS, "cell") \
-                  .filter(F.col("cell") >= 0)
-    return (d.groupBy(cells_sql.cell_l0_digit(F.col("cell")).alias("l0"))
-             .agg(F.count("*").alias("n_pages"),
-                  F.min("cell").alias("min_cell"),
-                  F.max("cell").alias("max_cell"))
-             .orderBy("l0"))
-
-
-def _sql_native_geocode() -> str:
-    from .mat import mat_glob
-
-    r = _NG_RBITS
-    ny, nx = (r + 1) // 2, r // 2
-    return f"""
-WITH xy AS (
-  -- bounds tested on DOUBLES before any cast, mirroring with_cell_from_xy's
-  -- inb guard: an extreme-but-finite projected coordinate must MISMATCH as
-  -- an absent row (Spark yields -1), never crash the oracle's BIGINT cast.
-  -- The guard tests the DERIVED (x-X0)/SIDE — the exact expression Spark's
-  -- fi/fj check uses — so both engines share the same IEEE rounding at the
-  -- cell-matrix edge (raw-x bounds could round across the boundary within
-  -- ~1 ulp and admit a row on one side only)
-  SELECT url, x, y FROM read_parquet('{mat_glob("native_geocode_xy")}')
-  WHERE isfinite(x) AND isfinite(y)
-    AND (x - {_X0!r}) / {_SIDE!r} >= 0.0
-    AND (x - {_X0!r}) / {_SIDE!r} < 4.0
-    AND (y - {_Y0!r}) / {_SIDE!r} >= 0.0
-    AND (y - {_Y0!r}) / {_SIDE!r} < 5.0
-), fr AS (
-  SELECT url,
-         CAST(floor((x - {_X0!r}) / {_SIDE!r}) AS BIGINT) AS i,
-         CAST(floor((y - {_Y0!r}) / {_SIDE!r}) AS BIGINT) AS j,
-         (x - {_X0!r}) / {_SIDE!r} - floor((x - {_X0!r}) / {_SIDE!r}) AS u,
-         (y - {_Y0!r}) / {_SIDE!r} - floor((y - {_Y0!r}) / {_SIDE!r}) AS v
-  FROM xy),
-dg AS (
-  SELECT url, {_L0_CASE} AS digit,
-         least(CAST(floor(u * {1 << nx}) AS BIGINT), {(1 << nx) - 1}) AS ix,
-         least(CAST(floor(v * {1 << ny}) AS BIGINT), {(1 << ny) - 1}) AS iy
-  FROM fr),
-cells AS (
-  SELECT url, digit,
-         (digit * {1 << r} + {morton_ref(r)}) * 64 + {4 + r} AS cell
-  FROM dg WHERE digit >= 0)
-SELECT digit AS l0, CAST(count(*) AS BIGINT) AS n_pages,
-       min(cell) AS min_cell, max(cell) AS max_cell
-FROM cells GROUP BY digit ORDER BY l0
-"""
-
-
 QUERIES = {
     "geo_pages_l0_histogram": (g_pages_l0_histogram, SQL_PAGES_L0),
-    "geo_native_geocode": (g_native_geocode, _sql_native_geocode()),
     "geo_cover_lookup": (g_cover_lookup, SQL_COVER_LOOKUP),
     "geo_knn_ring": (g_knn_ring, _sql_knn_ring_pages()),
     "web_geo_lang_mix": (g_lang_mix, SQL_LANG_MIX),

@@ -164,8 +164,9 @@ QUERIES = {
 # --------------------------------------------------------------------------
 # web_kmv_vocab — the OTHER cardinality sketch: K-minimum-values / bottom-k
 # (Bar-Yossef et al. 2002; Beyer et al. 2007 unbiased estimator).  Distinct
-# tradeoff vs HLL: exact counts below K, mergeable by keeping the k
-# smallest of a union, and the state is K hashes instead of registers.
+# tradeoff vs HLL: exact distinct-hash count below K (collision probability
+# ~n^2/2^61), mergeable by keeping the k smallest of a union, and the state
+# is K hashes instead of registers.
 # --------------------------------------------------------------------------
 #
 # Shape: distinct (source, h) first (map-side combined), then the bottom-K
@@ -173,8 +174,9 @@ QUERIES = {
 # (bounded per key by the distinct count, never corpus-wide).  The
 # estimator is (K-1) * 2^60 / h_K with h_K the K-th smallest hash — an
 # exact int64 numerator over an exact int64 divisor, one IEEE division.
-# When a source has fewer than K distinct items the sketch IS the exact
-# set (n_seen < K -> exact), pytest-exercised via the merge-law test.
+# When a source has fewer than K distinct hashes the sketch IS the exact
+# hash set (n_seen < K -> exact distinct-hash count below K, collision
+# probability ~n^2/2^61), pytest-exercised via the merge-law test.
 
 _KMV_K = 32
 _KMV_RANGE = 1 << 60   # md5_h60 is uniform on [0, 2^60)

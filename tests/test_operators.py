@@ -199,10 +199,9 @@ def test_knn_fallback_ring_completes_short_queries(spark):
     lats = [qlat + 0.4, qlat + 0.5, qlat - 0.45, qlat + 0.6, qlat - 0.6]
     lons = [qlon + 0.4, qlon - 0.5, qlon + 0.5, qlon - 0.6, qlon + 0.6]
     x, y = _proj.forward(_np.array([qlat] + lats), _np.array([qlon] + lons))
-    from co_new_spark.grid import grids as _grids, cells as _ncells
-    bits, ok = _grids.grid_b_encode_xy(x, y, 10)
-    cell = _ncells.pack(bits, _np.full(bits.shape, 14, dtype=_np.int64))
-    assert ok.all()
+    from co_new_spark.grid import cells as _ncells
+    cell = _ncells.cell_b_from_xy(x, y, 10)
+    assert (cell >= 0).all()
     rows = [(int(i), float(xx), float(yy), int(cc))
             for i, (xx, yy, cc) in enumerate(zip(x, y, cell))]
     df = spark.createDataFrame(rows, ["id", "x", "y", "cell"])

@@ -1,10 +1,13 @@
 """Spark-surface tests: UDF wrappers, native cell algebra, pages source."""
 
+import pathlib
+import re
+
 import numpy as np
 from pyspark.sql import functions as F
 
 from co_new_spark.functions import cells_sql, geo, text as tx
-from co_new_spark.grid import cells as ncells
+from co_new_spark.grid import cells as ncells, grids, proj
 from co_new_spark.sources.pages import pages
 
 ASSERTS = [
@@ -45,6 +48,46 @@ def test_cell_b_udf_and_native_algebra(spark):
     assert out[1].code == "c358" and out[1].l0 == 0xC
     assert out[0].contained and out[1].contained
     assert out[2].cell == -1 and out[2].code is None and out[2].l0 == -1
+
+
+
+def test_cell_b_from_xy_is_encode_plus_pack():
+    rng = np.random.default_rng(0)
+    x = rng.uniform(grids.L0_ORIGIN_X - 1e5, grids.L0_ORIGIN_X + 5 * grids.L0_SIDE, 5000)
+    y = rng.uniform(grids.L0_ORIGIN_Y - 1e5, grids.L0_ORIGIN_Y + 6 * grids.L0_SIDE, 5000)
+    for r in (0, 1, 11, 26):
+        bits, valid = grids.grid_b_encode_xy(x, y, r)
+        exp = np.where(valid, ncells.pack(bits, np.full(x.shape, 4 + r)), -1)
+        assert valid.any() and not valid.all()
+        assert np.array_equal(ncells.cell_b_from_xy(x, y, r), exp)
+    # non-finite or outside the 4x5 L0 matrix in either coordinate -> -1
+    bad = np.array([np.nan, np.inf, -np.inf, -1.0, 1e12, -1e308])
+    gx, gy = (np.full(bad.shape, v) for v in proj.forward(4.711111, -74.072222))
+    assert (ncells.cell_b_from_xy(gx, gy, 26) >= 0).all()
+    assert (ncells.cell_b_from_xy(bad, gy, 26) == -1).all()
+    assert (ncells.cell_b_from_xy(gx, bad, 26) == -1).all()
+
+
+def test_grid_b_cell_udfs_agree_row_for_row(spark):
+    pts = [(None, None), (float("nan"), -74.0), (40.0, -3.7), (4.711111, -74.072222)]
+    df = spark.createDataFrame([(a, o, f"geo:{a},{o}") for a, o in pts],
+                               "lat double, lon double, text string")
+    lat, lon = F.col("lat"), F.col("lon")
+    xy = geo.latlon_to_xy(lat, lon)
+    rows = [tuple(r) for r in df.select(
+        geo.encode_b_cell(lat, lon, 26), geo.xy_to_cell_b(xy["x"], xy["y"], 26),
+        geo.latlon_to_xy_cell(lat, lon, 26)["cell"],
+        geo.encode_b_cell_from_text(F.col("text"), 26)).collect()]
+    assert rows[:3] == [(-1,) * 4] * 3  # null, NaN, off-grid (Madrid)
+    assert len(set(rows[3])) == 1 and rows[3][0] >= 0  # Bogota
+
+
+def test_grid_b_encode_stays_behind_grid_layer():
+    """Design rule: functions/ and operators/ reach the Grid B encode only via
+    grid.cells.cell_b_from_xy, never by re-assembling encode + pack."""
+    pkg = pathlib.Path(geo.__file__).parents[1]
+    src = [p for d in ("functions", "operators") for p in sorted((pkg / d).rglob("*.py"))]
+    assert not [p.name for p in src if re.search(r"grid_b_encode_xy\(|cells\.pack\(", p.read_text())]
 
 
 def test_native_interval_matches_numpy(spark):
