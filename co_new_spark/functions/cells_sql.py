@@ -4,7 +4,9 @@ Mirrors co_new_spark.grid.cells on the packed int64 form ``(bits << 6) |
 nbits`` using only shift/mask arithmetic, so parent / children / containment /
 interval ops stay inside whole-stage codegen — no Python boundary for
 hierarchy traversal, rollups, or the cover interval join (SURVEY.md §2.A13-15,
-§4 "1-D code algebra").
+§4 "1-D code algebra").  It also holds the Column mirror of the Grid B
+lattice codec (grids.grid_b_to_lattice / grid_b_from_lattice), which tiles,
+Hilbert keys and grid generation build on.
 
 Semantics source: /root/reference/README.md:51,77 (recursive Morton 4-way
 partition) and the mixed-precision covers of /root/reference/data/citycover.csv.
@@ -14,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..grid import grids
 
 MAXB = 57
 
@@ -68,23 +72,12 @@ def cell_interval(cell: Column, maxb: int = MAXB) -> tuple[Column, Column]:
     return lo, hi
 
 
-def cell_point_key(cell: Column, maxb: int = MAXB) -> Column:
-    """Leaf-depth position key (== interval lo) for prefix joins."""
-    return cell_interval(cell, maxb)[0]
-
-
 def cell_contains(anc: Column, desc: Column) -> Column:
     """Prefix containment: anc is ancestor-or-equal of desc (native codegen)."""
     dk = cell_depth(desc) - cell_depth(anc)
     return (anc >= 0) & (desc >= 0) & (dk >= 0) & (
         _shiftright(cell_bits(desc), dk) == cell_bits(anc)
     )
-
-
-def cell_truncate_bits(cell: Column, depth) -> Column:
-    """Leading ``depth`` bits of the cell's bit string (for per-level equi-joins)."""
-    depth = depth if isinstance(depth, Column) else F.lit(depth)
-    return _shiftright(cell_bits(cell), cell_depth(cell) - depth)
 
 
 def cell_children(cell: Column, k: int = 2) -> Column:
@@ -125,6 +118,55 @@ def deinterleave_yx_cols(bits: Column, ny: int, nx: int) -> tuple[Column, Column
         else:
             ix = ix.bitwiseOR(F.shiftleft(b, nx - 1 - t // 2))
     return iy, ix
+
+
+def square_lattice_bits(depth: int) -> int:
+    """Bits per axis of the square Grid B lattice at ``depth`` (= (depth-4)/2).
+    Odd-refinement cells would need the rectangular n_first/n_second split —
+    fail loud rather than mis-place them."""
+    r = depth - 4
+    if r < 0 or r % 2:
+        raise ValueError(f"the Grid B lattice columns need even refinement, got depth={depth}")
+    return r // 2
+
+
+def cell_b_to_lattice(cell: Column, depth: int) -> tuple[Column, Column]:
+    """Grid B cell at ``depth`` (= 4+r, even r) -> (gy, gx) global lattice
+    coords, entirely native: digit -> (j, i) via literal arrays, refinement
+    bits de-interleaved with shifts (y-first Morton, MSB first).  NULL for
+    negative (invalid) cells.  Column mirror of grids.grid_b_to_lattice."""
+    ny = nx = square_lattice_bits(depth)
+    r = depth - 4
+    bits = F.shiftright(cell, 6)
+    digit = F.shiftright(bits, r)
+    ref = bits.bitwiseAND(F.lit((1 << r) - 1)) if r else F.lit(0)
+    jarr = F.array(*[F.lit(int(v)) for v in grids.L0_J_BY_DIGIT])
+    iarr = F.array(*[F.lit(int(v)) for v in grids.L0_I_BY_DIGIT])
+    j = F.element_at(jarr, (digit + 1).cast("int"))
+    i = F.element_at(iarr, (digit + 1).cast("int"))
+    iy, ix = deinterleave_yx_cols(ref, ny, nx)
+    ok = cell >= 0
+    return F.when(ok, j * (1 << ny) + iy), F.when(ok, i * (1 << nx) + ix)
+
+
+def cell_b_from_lattice(gy: Column, gx: Column, depth: int) -> Column:
+    """(gy, gx) global lattice coords -> Grid B cell at ``depth`` (even
+    refinement); NULL off the 16-cell cover.  Column mirror of
+    grids.grid_b_from_lattice + cells.pack."""
+    ny = nx = square_lattice_bits(depth)
+    r = depth - 4
+    digit_arr = F.array(*[F.lit(int(v)) for row in grids.L0_DIGIT_BY_JI
+                          for v in row])  # row-major (j, i)
+    inb = ((gy >= 0) & (gy < F.lit(grids.L0_NJ << ny))
+           & (gx >= 0) & (gx < F.lit(grids.L0_NI << nx)))
+    j = F.floor(gy / (1 << ny)).cast("long")
+    i = F.floor(gx / (1 << nx)).cast("long")
+    iy = gy.bitwiseAND(F.lit((1 << ny) - 1))
+    ix = gx.bitwiseAND(F.lit((1 << nx) - 1))
+    digit = F.when(inb, F.element_at(digit_arr, (j * grids.L0_NI + i + 1).cast("int")))
+    ref = interleave_yx_cols(iy, ix, ny, nx)
+    bits = F.shiftleft(digit.cast("long"), r).bitwiseOR(ref)
+    return F.when(digit >= 0, F.shiftleft(bits, 6).bitwiseOR(F.lit(depth)))
 
 
 def with_hilbert_index(df, gy: Column, gx: Column, order: int,

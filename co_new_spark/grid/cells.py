@@ -75,23 +75,20 @@ def interval(cell, maxb: int = MAXB) -> tuple[np.ndarray, np.ndarray]:
     return lo, hi
 
 
-def point_key(cell, maxb: int = MAXB) -> np.ndarray:
-    """A leaf-depth point cell -> its position key at depth maxb (== interval lo)."""
-    return interval(cell, maxb)[0]
-
-
 # ---------------------------------------------------------------------------
-# Grid-B global lattice coordinates (for neighbors / ring expansion)
+# Grid-B global lattice coordinates (for neighbors / ring expansion / boxes)
 # ---------------------------------------------------------------------------
 
 def cell_b_to_global_ji(cell) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Grid B cell -> (gy, gx, ny, nx): global row/col at the cell's own y/x depth.
 
     gy = j_l0 * 2^ny + iy_refine (ny = ceil(rbits/2), y-first), similarly gx.
-    Returns -1 rows for invalid cells.
+    Returns gy = gx = -1 (ny = nx = 0) for invalid cells, any negative cell
+    included.
     """
+    cell = np.asarray(cell, dtype=np.int64)
     bits, nb = unpack(cell)
-    r = nb - 4
+    r = np.where(cell >= 0, nb - 4, -1)
     gy = np.full(bits.shape, -1, dtype=np.int64)
     gx = np.full(bits.shape, -1, dtype=np.int64)
     nyv = np.zeros(bits.shape, dtype=np.int64)
@@ -100,44 +97,22 @@ def cell_b_to_global_ji(cell) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.nd
         if rv < 0:
             continue
         m = r == rv
-        rv = int(rv)
-        digit = (bits[m] >> U(rv)).astype(np.int64)
-        ref = bits[m] & ((U(1) << U(rv)) - U(1)) if rv else np.zeros(m.sum(), dtype=U)
-        j = grids.L0_J_BY_DIGIT[np.clip(digit, 0, 15)]
-        i = grids.L0_I_BY_DIGIT[np.clip(digit, 0, 15)]
-        ny, nx = morton.n_first(rv), morton.n_second(rv)
-        iy, ix = morton.deinterleave(ref, rv)
-        ok = j >= 0
-        gy[m] = np.where(ok, j * (1 << ny) + iy.astype(np.int64), -1)
-        gx[m] = np.where(ok, i * (1 << nx) + ix.astype(np.int64), -1)
-        nyv[m] = ny
-        nxv[m] = nx
+        gy[m], gx[m] = grids.grid_b_to_lattice(bits[m], int(rv))
+        nyv[m], nxv[m] = morton.n_first(int(rv)), morton.n_second(int(rv))
     return gy, gx, nyv, nxv
 
 
 def cell_b_from_global_ji(gy, gx, rbits: int) -> np.ndarray:
     """(global row, global col, refinement depth) -> Grid B cell (or -1 off-cover)."""
-    gy = np.asarray(gy, dtype=np.int64)
-    gx = np.asarray(gx, dtype=np.int64)
-    ny, nx = morton.n_first(rbits), morton.n_second(rbits)
-    j, iy = gy >> ny, gy & ((1 << ny) - 1)
-    i, ix = gx >> nx, gx & ((1 << nx) - 1)
-    inb = (i >= 0) & (i < grids.L0_NI) & (j >= 0) & (j < grids.L0_NJ) & (gy >= 0) & (gx >= 0)
-    digit = np.where(
-        inb, grids.L0_DIGIT_BY_JI[np.clip(j, 0, grids.L0_NJ - 1), np.clip(i, 0, grids.L0_NI - 1)], -1
-    )
-    ref = morton.interleave(iy.astype(U), ix.astype(U), rbits)
-    bits = (np.maximum(digit, 0).astype(U) << U(rbits)) | ref
-    out = pack(bits, np.full(gy.shape, 4 + rbits, dtype=np.int64))
-    return np.where(inb & (digit >= 0), out, np.int64(-1))
+    bits, valid = grids.grid_b_from_lattice(gy, gx, rbits)
+    return np.where(valid, pack(bits, 4 + rbits), np.int64(-1))
 
 
 def cell_b_from_xy(x, y, rbits: int) -> np.ndarray:
     """EPSG:9377 (x, y) -> Grid B cell at ``rbits`` refinement; -1 where x or y
     is non-finite or off-grid.  The one Grid B encode behind every geocode UDF."""
-    finite = np.isfinite(x) & np.isfinite(y)
-    bits, valid = grids.grid_b_encode_xy(np.where(finite, x, 0.0), np.where(finite, y, 0.0), rbits)
-    return np.where(valid & finite, pack(bits, 4 + rbits), np.int64(-1))
+    bits, valid = grids.grid_b_encode_xy(x, y, rbits)
+    return np.where(valid, pack(bits, 4 + rbits), np.int64(-1))
 
 
 def neighbors_b(cell, ring: int = 1) -> np.ndarray:
@@ -165,9 +140,19 @@ def neighbors_b(cell, ring: int = 1) -> np.ndarray:
 
 
 def cell_b_box(cell) -> tuple[np.ndarray, ...]:
-    """Grid B cell -> EPSG:9377 (xmin, ymin, xmax, ymax)."""
-    bits, nb = unpack(cell)
-    return grids.grid_b_decode_box(bits, nb)
+    """Grid B cell -> EPSG:9377 (xmin, ymin, xmax, ymax); NaN for invalid cells.
+
+    Lattice coordinates times the cell side (exact: sides are powers of two).
+    Vectorized over mixed depths (mixed-precision covers are the norm in
+    ``citycover.csv`` — 3-hex cells next to 4-hex+suffix cells).
+    """
+    gy, gx, ny, nx = cell_b_to_global_ji(cell)
+    ok = gy >= 0
+    dx = grids.L0_SIDE / (1 << nx)
+    dy = grids.L0_SIDE / (1 << ny)
+    x0 = np.where(ok, grids.L0_ORIGIN_X + gx * dx, np.nan)
+    y0 = np.where(ok, grids.L0_ORIGIN_Y + gy * dy, np.nan)
+    return x0, y0, x0 + dx, y0 + dy
 
 
 def cell_b_center(cell) -> tuple[np.ndarray, np.ndarray]:

@@ -116,65 +116,56 @@ def grid_a_decode_box(bits: np.ndarray, nbits: int) -> tuple[np.ndarray, ...]:
 # Grid B kernels (L0 lookup + y-first refinement)
 # =============================================================================
 
+def grid_b_from_lattice(gy, gx, rbits: int) -> tuple[np.ndarray, np.ndarray]:
+    """Global lattice (gy, gx) at ``rbits`` -> (cell bits uint64, valid bool).
+
+    The lattice is the 4x5 L0 matrix split into 2^ceil(rbits/2) rows and
+    2^floor(rbits/2) columns per L0 cell (y-first refinement), so
+    ``gy >> ny`` is the L0 row j and the low bits are the Morton refinement.
+    Coordinates off the 16-cell cover (negative included) are invalid; their
+    bits are unspecified.
+    """
+    gy = np.asarray(gy, dtype=np.int64)
+    gx = np.asarray(gx, dtype=np.int64)
+    ny, nx = morton.n_first(rbits), morton.n_second(rbits)
+    j, i = gy >> ny, gx >> nx
+    inb = (j >= 0) & (j < L0_NJ) & (i >= 0) & (i < L0_NI)
+    digit = np.where(inb, L0_DIGIT_BY_JI[np.clip(j, 0, L0_NJ - 1), np.clip(i, 0, L0_NI - 1)], -1)
+    ref = morton.interleave((gy & ((1 << ny) - 1)).astype(U), (gx & ((1 << nx) - 1)).astype(U), rbits)
+    bits = (np.maximum(digit, 0).astype(U) << U(rbits)) | ref
+    return bits, digit >= 0
+
+
+def grid_b_to_lattice(bits, rbits: int) -> tuple[np.ndarray, np.ndarray]:
+    """Grid B cell bits at ``rbits`` -> global lattice (gy, gx); -1 where the
+    bits are too wide for ``rbits`` (leading digit >= 16).  Every digit 0..15
+    names one of the 16 cover cells.  Inverse of grid_b_from_lattice."""
+    bits = np.asarray(bits, dtype=U)
+    digit = bits >> U(rbits)
+    ok = digit < U(16)
+    digit = np.where(ok, digit, U(0)).astype(np.int64)
+    ny, nx = morton.n_first(rbits), morton.n_second(rbits)
+    iy, ix = morton.deinterleave(bits & ((U(1) << U(rbits)) - U(1)), rbits)
+    gy = np.where(ok, (L0_J_BY_DIGIT[digit] << ny) | iy.astype(np.int64), -1)
+    gx = np.where(ok, (L0_I_BY_DIGIT[digit] << nx) | ix.astype(np.int64), -1)
+    return gy, gx
+
+
 def grid_b_encode_xy(x: np.ndarray, y: np.ndarray, rbits: int) -> tuple[np.ndarray, np.ndarray]:
     """EPSG:9377 (x, y) -> (cell bits uint64, valid bool) for Grid B.
 
     ``rbits`` = refinement bits below L0; total bit length = 4 + rbits
-    (leading 4 bits = L0 digit).  Points in a ji cell outside the 16-cell
-    cover (or outside the 4x5 matrix) are invalid.
+    (leading 4 bits = L0 digit).  Non-finite points and points off the
+    16-cell cover are invalid.  The range check runs on the float L0
+    coordinates, before any int cast.
     """
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    fi = (x - L0_ORIGIN_X) / L0_SIDE
-    fj = (y - L0_ORIGIN_Y) / L0_SIDE
-    i = np.floor(fi).astype(np.int64)
-    j = np.floor(fj).astype(np.int64)
-    inb = (i >= 0) & (i < L0_NI) & (j >= 0) & (j < L0_NJ)
-    digit = np.where(inb, L0_DIGIT_BY_JI[np.clip(j, 0, L0_NJ - 1), np.clip(i, 0, L0_NI - 1)], -1)
-    valid = inb & (digit >= 0)
-    ny, nx = morton.n_first(rbits), morton.n_second(rbits)  # y-first
-    u = np.clip(fi - i, 0, None)
-    v = np.clip(fj - j, 0, None)
-    ixr = np.clip(np.floor(u * (1 << nx)).astype(np.int64), 0, (1 << nx) - 1).astype(U)
-    iyr = np.clip(np.floor(v * (1 << ny)).astype(np.int64), 0, (1 << ny) - 1).astype(U)
-    ref = morton.interleave(iyr, ixr, rbits)
-    bits = (np.maximum(digit, 0).astype(U) << U(rbits)) | ref
-    return bits, valid
-
-
-def grid_b_decode_box(bits: np.ndarray, nbits) -> tuple[np.ndarray, ...]:
-    """Grid B cell bits (+ total nbits incl. the 4 L0 bits) -> EPSG:9377 box.
-
-    Vectorized over mixed nbits (mixed-precision covers are the norm in
-    ``citycover.csv`` — 3-hex cells next to 4-hex+suffix cells).
-    """
-    bits = np.asarray(bits, dtype=U)
-    nbits = np.broadcast_to(np.asarray(nbits, dtype=np.int64), bits.shape)
-    xmin = np.full(bits.shape, np.nan)
-    ymin = np.full(bits.shape, np.nan)
-    xmax = np.full(bits.shape, np.nan)
-    ymax = np.full(bits.shape, np.nan)
-    for nb in np.unique(nbits):
-        if nb < 4:
-            continue
-        m = nbits == nb
-        r = int(nb) - 4
-        digit = (bits[m] >> U(r)).astype(np.int64)
-        ref = bits[m] & ((U(1) << U(r)) - U(1)) if r else np.zeros(m.sum(), dtype=U)
-        j = L0_J_BY_DIGIT[np.clip(digit, 0, 15)]
-        i = L0_I_BY_DIGIT[np.clip(digit, 0, 15)]
-        ok = (digit >= 0) & (digit < 16) & (j >= 0)
-        ny, nx = morton.n_first(r), morton.n_second(r)
-        iyr, ixr = morton.deinterleave(ref, r)
-        dx = L0_SIDE / (1 << nx)
-        dy = L0_SIDE / (1 << ny)
-        x0 = L0_ORIGIN_X + i * L0_SIDE + ixr.astype(np.float64) * dx
-        y0 = L0_ORIGIN_Y + j * L0_SIDE + iyr.astype(np.float64) * dy
-        xmin[m] = np.where(ok, x0, np.nan)
-        ymin[m] = np.where(ok, y0, np.nan)
-        xmax[m] = np.where(ok, x0 + dx, np.nan)
-        ymax[m] = np.where(ok, y0 + dy, np.nan)
-    return xmin, ymin, xmax, ymax
+    fi = (np.asarray(x, dtype=np.float64) - L0_ORIGIN_X) / L0_SIDE
+    fj = (np.asarray(y, dtype=np.float64) - L0_ORIGIN_Y) / L0_SIDE
+    inb = (fi >= 0) & (fi < L0_NI) & (fj >= 0) & (fj < L0_NJ)
+    ny, nx = morton.n_first(rbits), morton.n_second(rbits)
+    gy = np.floor(np.where(inb, fj, -1.0) * (1 << ny)).astype(np.int64)
+    gx = np.floor(np.where(inb, fi, -1.0) * (1 << nx)).astype(np.int64)
+    return grid_b_from_lattice(gy, gx, rbits)
 
 
 # =============================================================================
@@ -204,11 +195,9 @@ def osmcode_encode_b(lat, lon, rbits: int) -> np.ndarray:
 
     lat = np.asarray(lat, dtype=np.float64)
     lon = np.asarray(lon, dtype=np.float64)
-    x, y = proj.forward(lat, lon)
-    finite = np.isfinite(x) & np.isfinite(y)
-    bits, valid = grid_b_encode_xy(np.where(finite, x, 0), np.where(finite, y, 0), rbits)
+    bits, valid = grid_b_encode_xy(*proj.forward(lat, lon), rbits)
     codes = b16h_encode(bits, 4 + rbits)
-    codes[~(valid & finite)] = ""
+    codes[~valid] = ""
     return codes
 
 

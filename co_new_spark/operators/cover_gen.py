@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import cells_sql
+from ..grid import grids
 from .coverage import clip_area_udf
 
 
@@ -31,8 +32,8 @@ def _cells_at_depth(spark: SparkSession, depth: int) -> DataFrame:
 def full_cell_area(depth: int) -> float:
     """Planar area of a full Grid B cell at ``depth`` (exact powers of two)."""
     r = depth - 4
-    side_x = 524_288.0 / (1 << (r // 2))
-    side_y = 524_288.0 / (1 << ((r + 1) // 2))
+    side_x = grids.L0_SIDE / (1 << (r // 2))
+    side_y = grids.L0_SIDE / (1 << ((r + 1) // 2))
     return side_x * side_y
 
 

@@ -37,34 +37,11 @@ def tile_id(x: Column, y: Column, z: int) -> Column:
     return F.when(ok, ty * (1 << z) + tx)
 
 
-def _grid_b_global_ji(cell: Column, depth: int) -> tuple[Column, Column]:
-    """Grid B cell (depth = 4+r, even r) -> (gy, gx) global lattice coords,
-    entirely native: digit -> (j, i) via literal arrays, refinement bits
-    de-interleaved with shifts (y-first Morton, MSB first).
-
-    Even refinement only (square cells); half-bit (odd-r) cells would need
-    the rectangular n_first/n_second split — fail loud rather than mis-tile.
-    """
-    r = depth - 4
-    if r < 0 or r % 2:
-        raise ValueError(f"cell_to_tile/tile_to_cells need even refinement, got depth={depth}")
-    ny = nx = r // 2
-    bits = F.shiftright(cell, 6)
-    digit = F.shiftright(bits, r)
-    ref = bits.bitwiseAND(F.lit((1 << r) - 1)) if r else F.lit(0)
-    jarr = F.array(*[F.lit(int(v)) for v in grids.L0_J_BY_DIGIT])
-    iarr = F.array(*[F.lit(int(v)) for v in grids.L0_I_BY_DIGIT])
-    j = F.element_at(jarr, (digit + 1).cast("int"))
-    i = F.element_at(iarr, (digit + 1).cast("int"))
-    iy, ix = cells_sql.deinterleave_yx_cols(ref, ny, nx)
-    return j * (1 << ny) + iy, i * (1 << nx) + ix
-
-
 def cell_to_tile(cell: Column, depth: int, z: int) -> Column:
     """A26: Grid B cell -> containing XYZ tile id at zoom z (via cell center,
     all codegen arithmetic — no UDF).  NULL for invalid cells."""
     side = grids.L0_SIDE / (1 << (depth - 4) // 2)
-    gy, gx = _grid_b_global_ji(cell, depth)
+    gy, gx = cells_sql.cell_b_to_lattice(cell, depth)
     cx = F.lit(X0) + (gx.cast("double") + 0.5) * F.lit(side)
     cy = F.lit(Y0) + (gy.cast("double") + 0.5) * F.lit(side)
     return F.when(cell >= 0, tile_id(cx, cy, z))
@@ -77,10 +54,7 @@ def tile_to_cells(tile: Column, z: int, depth: int) -> Column:
     Native: tile -> planar extent -> lattice index window -> sequence x
     sequence -> re-interleave.  Callers explode the array for tile joins.
     """
-    r = depth - 4
-    if r < 0 or r % 2:
-        raise ValueError(f"cell_to_tile/tile_to_cells need even refinement, got depth={depth}")
-    ny = nx = r // 2
+    ny = nx = cells_sql.square_lattice_bits(depth)
     side = grids.L0_SIDE / (1 << ny)
     n = 1 << z
     tx = F.pmod(tile, F.lit(n))
@@ -99,26 +73,13 @@ def tile_to_cells(tile: Column, z: int, depth: int) -> Column:
     gy0 = F.greatest(F.floor((y0 - F.lit(Y0)) / F.lit(side) - 0.5) + 1, F.lit(0)).cast("long")
     gy1 = F.least(F.floor((y1 - F.lit(Y0)) / F.lit(side) - 0.5),
                   F.lit(grids.L0_NJ * (1 << ny) - 1)).cast("long")
-    digit_arr = F.array(*[F.lit(int(v)) for row in grids.L0_DIGIT_BY_JI
-                          for v in row])  # row-major (j, i)
-
-    def _cell(gy, gx):
-        j = F.floor(gy / (1 << ny)).cast("long")
-        i = F.floor(gx / (1 << nx)).cast("long")
-        iy = gy.bitwiseAND(F.lit((1 << ny) - 1))
-        ix = gx.bitwiseAND(F.lit((1 << nx) - 1))
-        digit = F.element_at(digit_arr, (j * grids.L0_NI + i + 1).cast("int"))
-        ref = cells_sql.interleave_yx_cols(iy, ix, ny, nx)
-        bits = F.shiftleft(digit.cast("long"), r).bitwiseOR(ref)
-        return F.when(digit >= 0, F.shiftleft(bits, 6).bitwiseOR(F.lit(depth)))
-
     # F.sequence DESCENDS when start > stop — an empty window must yield an
     # empty array, not a reversed walk off the lattice
     empty = F.array().cast("array<bigint>")
     seq_y = F.when(gy0 <= gy1, F.sequence(gy0, gy1)).otherwise(empty)
     seq_x = F.when(gx0 <= gx1, F.sequence(gx0, gx1)).otherwise(empty)
     pairs = F.flatten(F.transform(
-        seq_y, lambda gy: F.transform(seq_x, lambda gx: _cell(gy, gx)),
+        seq_y, lambda gy: F.transform(seq_x, lambda gx: cells_sql.cell_b_from_lattice(gy, gx, depth)),
     ))
     return F.filter(pairs, lambda c: c.isNotNull())
 

@@ -273,25 +273,12 @@ JOIN {_sql_codec_one(11, 'code_j')} j ON g.event_id = j.event_id
 # geo_grid_generate — materialize a full grid level + geometry (A18)
 # ---------------------------------------------------------------------------
 
-_J_ARR = [int(v) for v in grids.L0_J_BY_DIGIT]
-_I_ARR = [int(v) for v in grids.L0_I_BY_DIGIT]
-
-
 def g_grid_generate(spark: SparkSession, sf: str) -> DataFrame:
     """All 256 depth-8 cells with native (codegen) box decode — no UDF at all."""
-    df = spark.range(256)
-    digit = F.shiftright(F.col("id"), 4)
-    ref = F.col("id").bitwiseAND(F.lit(15))
-    iy = F.shiftright(ref, 3).bitwiseAND(F.lit(1)) * 2 + F.shiftright(ref, 1).bitwiseAND(F.lit(1))
-    ix = F.shiftright(ref, 2).bitwiseAND(F.lit(1)) * 2 + ref.bitwiseAND(F.lit(1))
-    jarr = F.array(*[F.lit(v) for v in _J_ARR])
-    iarr = F.array(*[F.lit(v) for v in _I_ARR])
-    j = F.element_at(jarr, (digit + 1).cast("int"))
-    i = F.element_at(iarr, (digit + 1).cast("int"))
-    gx = i * 4 + ix
-    gy = j * 4 + iy
-    return df.select(
-        (F.col("id") * 64 + 8).alias("cell"),
+    cell = F.col("id") * 64 + 8
+    gy, gx = cells_sql.cell_b_to_lattice(cell, 8)
+    return spark.range(256).select(
+        cell.alias("cell"),
         (F.lit(X0) + gx * F.lit(_DX8)).alias("xmin"),
         (F.lit(Y0) + gy * F.lit(_DX8)).alias("ymin"),
         (F.lit(X0) + gx * F.lit(_DX8) + F.lit(_DX8)).alias("xmax"),
@@ -665,13 +652,11 @@ _HILBERT_ORDER = 7
 
 
 def g_hilbert_index(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.tiles import _grid_b_global_ji
-
     pts = _event_points(spark, sf)
     cells = pts.withColumn(
         "cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _HILBERT_R)
     ).filter(F.col("cell") >= 0)
-    gy, gx = _grid_b_global_ji(F.col("cell"), 4 + _HILBERT_R)
+    gy, gx = cells_sql.cell_b_to_lattice(F.col("cell"), 4 + _HILBERT_R)
     out = cells_sql.with_hilbert_index(cells, gy, gx, _HILBERT_ORDER)
     return out.select("event_id", "cell", "hd")
 

@@ -22,6 +22,7 @@ from .mat import run_tmp
 from ..functions import global_grid
 from ..grid import grids
 from ..operators import tiles
+from ..sources.reference_data import REF_DIR
 from ..sources.tables import load
 from .geo_algebra import _d, _l0_case, _sql_cells_cte, _sql_ref
 
@@ -203,9 +204,8 @@ SELECT cell, n, min_ev, l0 FROM agg WHERE l0 IN (12, 6, 4)
 def g_geojson_scan(spark: SparkSession, sf: str) -> DataFrame:
     """Scan the reference grid256 GeoJSON as a DataFrame: explode features,
     pull nested properties + ring vertex counts natively."""
-    ref = os.environ.get("CO_REFERENCE_DIR", "/root/reference")
     raw = spark.read.option("multiLine", True).json(
-        os.path.join(ref, "data", "grid256.geojson"))
+        os.path.join(REF_DIR, "data", "grid256.geojson"))
     feats = raw.select(F.explode("features").alias("f"))
     return feats.select(
         F.col("f.properties.code").alias("code"),
@@ -229,16 +229,15 @@ def g_decode_geojson(spark: SparkSession, sf: str) -> DataFrame:
     5 decimals) against the cell's four lattice-box corners decoded through
     the ENGINE kernels (cell_b_box + inverse TM, Arrow-batched): a corner is
     ok when some decoded corner is within 5e-4 deg.  Hash-checked against a
-    VALUES oracle pinning (cell, code, n_corners_ok = 4) — upgrading this
+    read_json oracle pinning (cell, code, n_corners_ok = 4) — upgrading this
     entry from rows-only (the inverse TM itself is not SQL-expressible).
     The GeoJSON Feature-string sink surface stays registered as
     geo_cell_geojson (rows-only, format pytest-gated).
     """
     from ..functions import geo
 
-    ref = os.environ.get("CO_REFERENCE_DIR", "/root/reference")
     raw = spark.read.option("multiLine", True).json(
-        os.path.join(ref, "data", "grid256L0.geojson"))
+        os.path.join(REF_DIR, "data", "grid256L0.geojson"))
     feats = raw.select(F.explode("features").alias("f"))
     rows = feats.select(
         F.col("f.properties.code").alias("code"),
@@ -263,20 +262,16 @@ def g_decode_geojson(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("cell"))
 
 
-def _sql_decode_geojson() -> str:
-    """VALUES oracle: every published L0 cell must have all 4 corners ok."""
-    import json as _json
-
-    ref = os.environ.get("CO_REFERENCE_DIR", "/root/reference")
-    with open(os.path.join(ref, "data", "grid256L0.geojson")) as fh:
-        feats = _json.load(fh)["features"]
-    vals = []
-    for f in feats:
-        code = f["properties"]["code"]
-        vals.append(f"({'0123456789abcdef'.index(code) * 64 + 4}, '{code}', 4)")
-    return ("SELECT cell, code, n_corners_ok FROM (VALUES "
-            + ", ".join(vals)
-            + ") t(cell, code, n_corners_ok) ORDER BY cell")
+# A3 oracle: every published L0 cell must have all 4 corners ok.  A static
+# read_json query, so the fixture is read only when the oracle runs.
+SQL_DECODE_GEOJSON = f"""
+SELECT (instr('0123456789abcdef', f.properties.code) - 1) * 64 + 4 AS cell,
+       f.properties.code AS code, 4 AS n_corners_ok
+FROM (SELECT unnest(features) AS f
+      FROM read_json('{os.path.join(REF_DIR, "data", "grid256L0.geojson")}',
+                     maximum_object_size=104857600))
+ORDER BY cell
+"""
 
 
 _GJ_RING = "$.geometry.coordinates[0]"
@@ -423,19 +418,19 @@ FROM ins GROUP BY l0
 
 # B3 oracle: DuckDB's bundled JSON reader restates the same nested
 # projection over the same file — upgrading geo_geojson_scan from rows-only.
-SQL_GEOJSON_SCAN = """
+SQL_GEOJSON_SCAN = f"""
 SELECT f.properties.code AS code, f.properties.ji AS ji,
        f.properties.ji_int AS ji_int, f.geometry.type AS geom_type,
        len(f.geometry.coordinates[1]) AS n_vertices
 FROM (SELECT unnest(features) AS f
-      FROM read_json('/root/reference/data/grid256.geojson',
+      FROM read_json('{os.path.join(REF_DIR, "data", "grid256.geojson")}',
                      maximum_object_size=104857600))
 """
 
 
 QUERIES = {
     "geo_pip_colombia": (g_pip_colombia, _sql_pip_colombia()),
-    "geo_decode_geojson": (g_decode_geojson, _sql_decode_geojson()),
+    "geo_decode_geojson": (g_decode_geojson, SQL_DECODE_GEOJSON),
     "geo_cell_geojson": (g_cell_geojson, _sql_cell_geojson()),
     "geo_global_cell": (g_global_cell, _sql_global()),
     "geo_cell_to_tile": (g_cell_to_tile, _sql_cell_to_tile()),

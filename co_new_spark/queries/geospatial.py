@@ -260,8 +260,8 @@ def _bbox_cover_cells(xmin: float, ymin: float, xmax: float, ymax: float,
 
     The inclusive max lattice index is ceil(max/w) - 1: a box edge exactly on
     a cell boundary excludes that boundary's cell, an edge any amount above
-    it includes it — no epsilon.  Cell ids come from the ONE canonical
-    encode (cells.cell_b_from_xy on cell centers), not a re-derivation.
+    it includes it — no epsilon.  Cell ids come from the ONE lattice codec
+    (cells.cell_b_from_global_ji), not a re-derivation.
     """
     import math
 
@@ -274,9 +274,7 @@ def _bbox_cover_cells(xmin: float, ymin: float, xmax: float, ymax: float,
     gy0 = math.floor((ymin - grids.L0_ORIGIN_Y) / w)
     gy1 = math.ceil((ymax - grids.L0_ORIGIN_Y) / w) - 1
     gx, gy = np.meshgrid(np.arange(gx0, gx1 + 1), np.arange(gy0, gy1 + 1))
-    cx = grids.L0_ORIGIN_X + (gx.ravel() + 0.5) * w
-    cy = grids.L0_ORIGIN_Y + (gy.ravel() + 0.5) * w
-    cells = grid_cells.cell_b_from_xy(cx, cy, rbits)
+    cells = grid_cells.cell_b_from_global_ji(gy.ravel(), gx.ravel(), rbits)
     return [int(c) for c in cells[cells >= 0]]
 
 

@@ -27,18 +27,15 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..grid import grids, proj
+from ..grid import cells, proj
 
 _INSET_M = 12_000.0  # margin so WGS84 rects are strictly inside their 9377 cell
 
 
 def _cell_wgs84_rect(digit: int) -> tuple[float, float, float, float]:
     """Conservative (latmin, latmax, lonmin, lonmax) strictly inside L0 cell."""
-    j = int(grids.L0_J_BY_DIGIT[digit])
-    i = int(grids.L0_I_BY_DIGIT[digit])
-    s = grids.L0_SIDE
-    x0, y0 = grids.L0_ORIGIN_X + i * s + _INSET_M, grids.L0_ORIGIN_Y + j * s + _INSET_M
-    x1, y1 = x0 + s - 2 * _INSET_M, y0 + s - 2 * _INSET_M
+    bx0, by0, bx1, by1 = (float(v[0]) for v in cells.cell_b_box([digit << 6 | 4]))
+    x0, y0, x1, y1 = bx0 + _INSET_M, by0 + _INSET_M, bx1 - _INSET_M, by1 - _INSET_M
     t = np.linspace(0.0, 1.0, 65)
     bot_lat, _ = proj.inverse(x0 + t * (x1 - x0), np.full_like(t, y0))
     top_lat, _ = proj.inverse(x0 + t * (x1 - x0), np.full_like(t, y1))

@@ -216,3 +216,67 @@ def test_off_grid_points_are_null():
     codes_b = grids.osmcode_encode_b(lat, lon, 16)
     assert codes_b[0] == "" and codes_b[1] == "" and codes_b[3] == ""
     assert codes_b[2] != ""
+
+
+def _cover_mask(gy, gx, rbits):
+    """Expected lattice membership of the 16-cell cover, straight from the table."""
+    ny, nx = (rbits + 1) // 2, rbits // 2
+    j, i = np.floor_divide(gy, 1 << ny), np.floor_divide(gx, 1 << nx)
+    inb = (j >= 0) & (j < grids.L0_NJ) & (i >= 0) & (i < grids.L0_NI)
+    return inb & (grids.L0_DIGIT_BY_JI[np.clip(j, 0, 4), np.clip(i, 0, 3)] >= 0)
+
+
+@pytest.mark.parametrize("rbits", range(27))
+def test_lattice_pair_roundtrip(rbits):
+    rng = np.random.default_rng(rbits)
+    ny, nx = (rbits + 1) // 2, rbits // 2
+    gy = rng.integers(-(1 << ny) - 3, 6 << ny, 4000)
+    gx = rng.integers(-(1 << nx) - 3, 5 << nx, 4000)
+    on = _cover_mask(gy, gx, rbits)
+    assert on.any() and not on.all()
+    bits, valid = grids.grid_b_from_lattice(gy, gx, rbits)
+    assert np.array_equal(valid, on)
+    by, bx = grids.grid_b_to_lattice(bits[on], rbits)
+    assert np.array_equal(by, gy[on]) and np.array_equal(bx, gx[on])
+    # through the cell long: g on the cover, -1 off it
+    cell = cells.cell_b_from_global_ji(gy, gx, rbits)
+    assert np.array_equal(cell >= 0, on)
+    cy, cx, cny, cnx = cells.cell_b_to_global_ji(cell)
+    assert np.array_equal(cy, np.where(on, gy, -1)) and np.array_equal(cx, np.where(on, gx, -1))
+    assert (cny[on] == ny).all() and (cnx[on] == nx).all()
+
+
+@pytest.mark.parametrize("rbits", [0, 1, 2, 7, 12, 19, 26, 33])
+def test_cell_box_centre_and_lower_corner_encode_back(rbits):
+    rng = np.random.default_rng(100 + rbits)
+    digit = rng.integers(0, 16, 3000).astype(np.uint64)
+    ref = rng.integers(0, 1 << rbits, 3000, dtype=np.uint64) if rbits else np.zeros(3000, np.uint64)
+    cell = cells.pack((digit << np.uint64(rbits)) | ref, 4 + rbits)
+    x0, y0, x1, y1 = cells.cell_b_box(cell)
+    assert np.array_equal(cells.cell_b_from_xy(x0, y0, rbits), cell)
+    assert np.array_equal(cells.cell_b_from_xy((x0 + x1) / 2, (y0 + y1) / 2, rbits), cell)
+    assert np.array_equal(cells.cell_b_from_xy(*cells.cell_b_center(cell), rbits), cell)
+
+
+def test_grid_b_encode_non_finite_is_silent():
+    import warnings
+
+    bad = np.array([np.nan, np.inf, -np.inf, 1e308, -1e308, np.finfo(np.float64).max])
+    good = np.full(bad.shape, grids.L0_ORIGIN_X + 1.5 * grids.L0_SIDE)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for rbits in (0, 1, 26, 30, 53):
+            for x, y in ((bad, good), (good, bad), (bad, bad[::-1])):
+                _, valid = grids.grid_b_encode_xy(x, y, rbits)
+                assert not valid.any()
+                assert (cells.cell_b_from_xy(x, y, rbits) == -1).all()
+
+
+def test_negative_cells_decode_to_nothing():
+    neg = np.array([-1, -2, -64, np.iinfo(np.int64).min])
+    gy, gx, _, _ = cells.cell_b_to_global_ji(neg)
+    assert (gy == -1).all() and (gx == -1).all()
+    assert all(np.isnan(v).all() for v in cells.cell_b_box(neg))
+    assert all(np.isnan(v).all() for v in cells.cell_b_center(neg))
+    assert np.isnan(cells.area_m2(neg)).all()
+    assert cells.cell_b_to_global_ji(-1)[0] == -1 and np.isnan(cells.cell_b_box(-1)[0])

@@ -90,6 +90,54 @@ def test_grid_b_encode_stays_behind_grid_layer():
     assert not [p.name for p in src if re.search(r"grid_b_encode_xy\(|cells\.pack\(", p.read_text())]
 
 
+def test_lattice_tables_stay_behind_the_lattice_codec():
+    """Design rule 8: the ji <-> digit tables are named only by the numpy
+    lattice pair (grid/grids.py) and its Column mirror (functions/cells_sql.py),
+    and nothing imports a private name from operators.tiles."""
+    pkg = pathlib.Path(geo.__file__).parents[1]
+    allowed = {pkg / "grid" / "grids.py", pkg / "functions" / "cells_sql.py"}
+    src = sorted(pkg.rglob("*.py"))
+    tables = re.compile(r"\bL0_(DIGIT_BY_JI|J_BY_DIGIT|I_BY_DIGIT)\b")
+    assert not [p.name for p in src if p not in allowed and tables.search(p.read_text())]
+    private = re.compile(r"from\s+\S*tiles\s+import\s+[^\n]*\b_\w|tiles\._\w")
+    assert not [p.name for p in src if private.search(p.read_text())]
+
+
+def test_column_lattice_pair_matches_numpy(spark):
+    rng = np.random.default_rng(5)
+    for depth in (8, 12, 14):
+        k = (depth - 4) // 2
+        gy = rng.integers(-3, (5 << k) + 3, 600)
+        gx = rng.integers(-3, (4 << k) + 3, 600)
+        exp = ncells.cell_b_from_global_ji(gy, gx, depth - 4)
+        df = spark.createDataFrame(
+            [(int(a), int(b), int(c)) for a, b, c in zip(gy, gx, exp)] + [(0, 0, -1), (0, 0, -64)],
+            "gy long, gx long, cell long")
+        ly, lx = cells_sql.cell_b_to_lattice(F.col("cell"), depth)
+        rows = df.select(
+            cells_sql.cell_b_from_lattice(F.col("gy"), F.col("gx"), depth).alias("c"),
+            ly.alias("ly"), lx.alias("lx"), "cell").collect()
+        assert [-1 if r.c is None else r.c for r in rows[:600]] == exp.tolist()
+        ey, ex, _, _ = ncells.cell_b_to_global_ji(np.array([r.cell for r in rows]))
+        assert [-1 if r.ly is None else r.ly for r in rows] == ey.tolist()
+        assert [-1 if r.lx is None else r.lx for r in rows] == ex.tolist()
+        assert (exp >= 0).any() and (exp < 0).any()
+
+
+def test_invalid_cells_decode_to_nan_through_udfs(spark):
+    import math
+
+    neg = [-1, -2, -64, None]
+    df = spark.createDataFrame([(c,) for c in neg], "cell long")
+    rows = df.select(geo.cell_b_box(F.col("cell")).alias("b"),
+                     geo.cell_b_center(F.col("cell")).alias("c")).collect()
+    for r in rows:  # Arrow carries the NaN back as NULL
+        assert all(v is None or math.isnan(v)
+                   for v in (r.b.xmin, r.b.ymin, r.b.xmax, r.b.ymax, r.c.x, r.c.y))
+    x0, y0, x1, y1 = ncells.cell_b_box(np.array([-1, -2, -64]))
+    assert np.isnan(np.concatenate([x0, y0, x1, y1])).all()
+
+
 def test_native_interval_matches_numpy(spark):
     codes = ["a0ec", "8Z", "c358G", "67d9fM", "0"]
     df = spark.createDataFrame([(c,) for c in codes], ["code"])
